@@ -73,7 +73,7 @@ def _rotated(registry: dict, oracled: set[str]) -> dict:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 shape pricing summary) on sf0.001."""
-    from crypto_price_data_pipeline_spark.queries import q01_pricing_summary
+    from crypto_price_data_pipeline_spark.queries_tpch import q01_pricing_summary
 
     return q01_pricing_summary(spark, "/root/testdata/sf0.001")
 

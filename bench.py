@@ -288,8 +288,8 @@ def main() -> None:
         # the first to parse, and adding two ~2.3 KB derived maps (85
         # common entries vs BENCH_r15) pushed the line to 9.6 KB —
         # re-risking truncation for information any reader can
-        # recompute from this line + the prior BENCH file (the repo's
-        # tools/bench_checklist.py does exactly that). The TIMED
+        # recompute from this line + the prior BENCH file (diff the two
+        # files' per-query maps). The TIMED
         # surface, methodology and every primary field are unchanged;
         # only where the derived diagnostics are printed moved.
         out["prev_round"] = prev_round

@@ -268,11 +268,7 @@ def simhash32_table(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import fp_group_stats, simhash_md5
 
     def _build() -> DataFrame:
-        vocab = (
-            token_lang_counts(spark, sf)
-            .select(F.col("w").alias("_t"))
-            .distinct()
-        )
+        vocab = token_lang_counts(spark, sf).select(F.col("w").alias("_t"))
         return simhash_md5(
             _scale_out(load_table(spark, sf, "documents")), vocab=vocab
         )
@@ -324,8 +320,9 @@ def winnow_postings(spark: SparkSession, sf: str) -> DataFrame:
 def tfidf_weights(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, term, w): word-trigram TF-IDF weight postings with the
     df ≤ 50 hot-posting cap, weights as the log-free rational
-    tf · N/df (the determinism contract of queries_ext18). Norms and
-    the AllPairs posting join both derive from this one table.
+    tf · N/df (the determinism contract of
+    queries_retrieval.q_tfidf_cosine_pairs). Norms and the AllPairs
+    posting join both derive from this one table.
 
     ``term`` is stored as xxhash64 of the trigram, not the string —
     the posting self-join shuffles 8-byte longs instead of ~20-char

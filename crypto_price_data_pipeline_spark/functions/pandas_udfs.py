@@ -31,14 +31,3 @@ def winsorized_mean(v: pd.Series) -> float:
     x = v.to_numpy(dtype="float64")
     lo, hi = np.quantile(x, [0.05, 0.95])
     return float(np.clip(x, lo, hi).mean())
-
-
-@F.pandas_udf("double")
-def zscore(v: pd.Series) -> pd.Series:
-    """Scalar pandas UDF (vectorized per Arrow batch): per-batch
-    standardization example; for global z-scores compose mean/std via
-    window or agg instead."""
-    m, s = v.mean(), v.std(ddof=0)
-    if not s:
-        return pd.Series([0.0] * len(v))
-    return (v - m) / s

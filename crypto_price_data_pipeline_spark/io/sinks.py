@@ -63,38 +63,6 @@ def idempotent_append(
     return n
 
 
-def merge_upsert(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_by: list[str] | None = None,
-) -> int:
-    """MERGE/upsert emulation on plain parquet (no Delta in this env):
-    new rows replace existing rows with the same ``keys`` (the batch
-    equivalent of the reference's ``update_one $set`` staging mutation,
-    SURVEY.md §2.1 S6). anti-join(existing, batch) ∪ batch → overwrite.
-
-    At warehouse scale use a transactional format (Delta/Iceberg
-    MERGE INTO); this emulation rewrites the table, so reserve it for
-    dimension-sized data — fact tables should use idempotent_append.
-    Returns the resulting row count.
-    """
-    batch = df.dropDuplicates(keys)
-    try:
-        existing = spark.read.parquet(path)
-        keep = existing.join(batch.select(*keys), on=keys, how="left_anti")
-        merged = keep.unionByName(batch)
-    except Exception:
-        merged = batch
-    # localCheckpoint truncates lineage so overwriting the path we just
-    # read from cannot re-trigger a scan of the overwritten files
-    merged = merged.transform(materialize)
-    n = merged.count()
-    overwrite_parquet(merged, path, partition_by)
-    return n
-
-
 def write_sorted(
     df: DataFrame,
     path: str,

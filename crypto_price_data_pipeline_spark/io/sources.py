@@ -32,8 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Plain `spark.read.parquet` so predicate
@@ -94,12 +92,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for the SQL API."""
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def read_json_payloads(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read a directory of raw JSON payload files with a declared schema
-    (the batch stand-in for the reference's HTTP poll, SURVEY.md §2.1 S1)."""
-    return spark.read.schema(schema).json(path)
 
 
 def read_csv(

@@ -1,7 +1,7 @@
 """Bloom-filter pre-filtering as DATA ([EXT], SURVEY.md §2.11) — the
 100-TB front door for benchmark-contamination scans.
 
-The exact containment check (queries_ext5.q_contamination) joins the
+The exact containment check (queries_dedup.q_contamination) joins the
 corpus' exploded n-grams against the benchmark's; correct, but at 100
 TB the corpus explode feeds a join. A Bloom filter built over the
 benchmark's grams turns the corpus side into a PURE PROJECTION: the

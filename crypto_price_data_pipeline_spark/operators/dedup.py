@@ -83,19 +83,6 @@ def check_precomputed_params(df: DataFrame, expected: dict, op: str) -> None:
             )
 
 
-def _hash_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
-    """n (a, b) pairs for h_i(x) = (a*x + b) mod p, reproducible."""
-    params = []
-    state = seed
-    for _ in range(n):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        a = (state | 1) % _MERSENNE_P
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        b = state % _MERSENNE_P
-        params.append((a, b))
-    return params
-
-
 def _gate_corpus_size(df: DataFrame, cap: int | None, op: str, scale_alt: str) -> None:
     """Refuse an explicitly-quadratic baseline above ``cap`` rows.
 
@@ -971,21 +958,23 @@ def simhash_md5(
     production twin needs no vocabulary table at all.
 
     ``vocab`` (r16, guide §2.4 — remove a redundant corpus pass): a
-    single-column ``_t`` frame whose token set must be a SUPERSET of
+    frame with a ``_t`` column whose token set must be a SUPERSET of
     ``df``'s distinct ``tokens_col`` tokens (the per-token join below
     is inner from the token-stream side, so extra vocab rows are
     harmless and a MISSING token would silently drop its votes — the
-    caller owns that contract). When omitted, the vocabulary is
-    derived from ``df`` itself, which plans a SECOND full scan +
-    tokenize of the corpus (column pruning trims it to the text
-    column, but at 100 TB it is still a second pass over the data).
+    caller owns that contract). Duplicate ``_t`` rows are harmless
+    too: the vocabulary is made distinct here on both paths, so a
+    repeated token never multiplies its votes. When omitted, the
+    vocabulary is derived from ``df`` itself, which plans a SECOND
+    full scan + tokenize of the corpus (column pruning trims it to
+    the text column, but at 100 TB it is still a second pass over
+    the data).
     The artifact build passes the stored counting cube's vocabulary —
     the same tokenizer over the same corpus, so the sets are equal and
     the fingerprints bit-identical, with the second corpus pass
     replaced by a vocabulary-sized cube scan."""
     toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("_t"))
-    if vocab is None:
-        vocab = toks.select("_t").distinct()
+    vocab = (toks if vocab is None else vocab).select("_t").distinct()
     vocab = vocab.select(
         "_t",
         F.conv(F.substring(F.md5("_t"), 1, 8), 16, 10).cast("long").alias("_h"),

@@ -5,7 +5,7 @@ fully deterministic and engine-portable (md5-keyed, no RNG state), so
 a mix is reproducible across engines, runs, and repartitionings — and
 a SQL oracle can verify row-for-row.
 
-Extends the uniform md5-prefix cut of queries_ext4.q_stratified_sample
+Extends the uniform md5-prefix cut of queries_text.q_stratified_sample
 (one global rate, summary output) to per-stratum TARGET WEIGHTS — the
 actual mixture contract — with row-level outputs.
 

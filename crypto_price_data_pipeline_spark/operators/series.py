@@ -1,7 +1,7 @@
 """Bounded-memory per-key series folds (scale hardening for the
 indicator queries).
 
-The bit-exact EMA/MACD query (queries_ext4.q_crypto_indicators)
+The bit-exact EMA/MACD query (queries_analytics.q_crypto_indicators)
 collects each key's FULL ordered series into one array and left-folds
 it with an `aggregate` HOF — deterministic and oracle-matching, but a
 single hot key with an unbounded series materializes the whole array

@@ -30,16 +30,6 @@ def tokenize(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
 
 
-def bpe_ish_tokens(col: Column | str) -> Column:
-    """Sub-word-ish tokens: split on whitespace AND punctuation
-    boundaries (the regex a BPE pre-tokenizer applies before merges)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.split(F.lower(c), r"[\s\p{Punct}]+"),
-        lambda t: t != "",
-    )
-
-
 def token_count(col: Column | str) -> Column:
     return F.size(tokenize(col))
 

@@ -47,16 +47,16 @@ ALLOWED = {
         'hwm = rollup.agg(F.max("bucket_start")).collect()[0][0]',
     ],
     # 1-row median bucket probe (two-pass exact median)
-    "queries_ext26.py": [".collect()"],
+    "queries_analytics.py": [".collect()"],
     # BPE learning: ONE argmax row per merge round (the next merge) —
     # the fixed-point family's bounded per-iteration driver scalar;
     # n_merges rounds total, each a single limit(1) row
     "operators/bpe.py": [".collect()"],
     # top-10 rank list (bounded by the preceding limit)
-    "queries_ext24.py": [".collect()"],
+    "queries_retrieval.py": [".collect()"],
     # the stored bpe_merges artifact read as expression literals:
     # vocab-bounded by construction (<= n_merges = 8 rows)
-    "queries_ext37.py": [
+    "queries_text.py": [
         'rows = bpe_merge_table(spark, sf).orderBy("step").collect()',
     ],
 }

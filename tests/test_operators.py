@@ -322,7 +322,7 @@ def test_exhaustive_baselines_gated_by_corpus_size(spark):
     import pytest
 
     from crypto_price_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-    from crypto_price_data_pipeline_spark.queries_ext import embedding_neardup_pairs
+    from crypto_price_data_pipeline_spark.queries_dedup import embedding_neardup_pairs
 
     with pytest.raises(ValueError, match="quadratic"):
         ngram_jaccard_pairs(_docs(spark), max_docs=2)
@@ -398,7 +398,7 @@ def test_ann_recall_sub_k_corpus(spark):
     denominator is min(k, |exact|), not the literal k (a 3-row corpus
     with a perfect ANN used to score 3/10 and flip recall_ok)."""
     from crypto_price_data_pipeline_spark.operators.similarity import cosine_topk
-    from crypto_price_data_pipeline_spark.queries import _ann_with_recall
+    from crypto_price_data_pipeline_spark.queries_retrieval import _ann_with_recall
 
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -1193,7 +1193,7 @@ def test_wav_query_fails_loudly_on_non_ascii_corpus(spark, tmp_path):
 
     import pytest
 
-    from crypto_price_data_pipeline_spark.queries_ext3 import q_wav_decode
+    from crypto_price_data_pipeline_spark.queries_media import q_wav_decode
 
     d = str(tmp_path / "sf_nonascii")
     os.makedirs(d)
@@ -1242,3 +1242,34 @@ def test_simhash_md5_external_vocab_bit_identical(spark):
             for r in simhash_md5(docs, vocab=vocab).collect()
         }
         assert got == ref
+
+
+def test_simhash_md5_duplicated_vocab_rows_bit_identical(spark):
+    """A caller-supplied vocabulary with repeated ``_t`` rows must give
+    the same fingerprints as the distinct one: simhash_md5 dedups the
+    vocabulary itself, so a repeated token cannot multiply its votes
+    (a doc "alpha beta" with alpha listed three times would otherwise
+    let alpha outvote beta on every bit where their hashes differ)."""
+    from pyspark.sql import functions as F
+
+    from crypto_price_data_pipeline_spark.operators.dedup import (
+        simhash_md5,
+        tokens_col,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma delta")],
+        "doc_id long, text string",
+    )
+    vocab = docs.select(F.explode(tokens_col("text")).alias("_t")).distinct()
+    repeated = vocab.union(
+        spark.createDataFrame([("alpha",), ("alpha",)], "_t string")
+    )
+
+    def fps(v):
+        return {
+            r["doc_id"]: r["simhash32"]
+            for r in simhash_md5(docs, vocab=v).collect()
+        }
+
+    assert fps(repeated) == fps(vocab)

@@ -228,7 +228,9 @@ def test_partitioned_staging_pruning(spark):
     pruning (the runtime analogue for ranges known only after the dim
     scan)."""
     from crypto_price_data_pipeline_spark.queries import QUERIES
-    from crypto_price_data_pipeline_spark.queries_ext5 import partitioned_staging_dir
+    from crypto_price_data_pipeline_spark.queries_pipeline import (
+        partitioned_staging_dir,
+    )
 
     plan = _plan(QUERIES["q_partitioned_staging"](spark, SF))
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)

@@ -74,10 +74,8 @@ def test_curation_v2_oracle_assembly_assumptions():
     CTE chain by splitting Q_CURATION_PIPELINE_SQL at 'ded AS'. If a
     v1 edit renames that CTE the split silently yields malformed SQL
     that only fails at driver time — pin the anchors here instead."""
-    from crypto_price_data_pipeline_spark.queries_ext6 import (
+    from crypto_price_data_pipeline_spark.queries_dedup import (
         Q_CURATION_PIPELINE_SQL,
-    )
-    from crypto_price_data_pipeline_spark.queries_ext7 import (
         _curation_v2_oracle,
     )
 

@@ -1,4 +1,4 @@
-"""Tests for skew-mitigation and merge/upsert sink."""
+"""Tests for skew mitigation and the scale-path operators."""
 
 from __future__ import annotations
 
@@ -17,23 +17,6 @@ def test_salted_join_matches_plain_join(spark):
     plain = sorted(tuple(r) for r in facts.join(dim, ["k"]).collect())
     salted = sorted(tuple(r) for r in salted_join(facts, dim, ["k"]).collect())
     assert plain == salted
-
-
-def test_merge_upsert(spark, tmp_path):
-    from crypto_price_data_pipeline_spark.io.sinks import merge_upsert
-
-    path = str(tmp_path / "dim")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    assert merge_upsert(spark, v1, path, keys=["id"]) == 2
-    # upsert: key 2 updated, key 3 inserted, key 1 untouched
-    v2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    assert merge_upsert(spark, v2, path, keys=["id"]) == 3
-    rows = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert rows == {1: "a", 2: "B", 3: "c"}
-    # replay of the same batch is a no-op semantically
-    assert merge_upsert(spark, v2, path, keys=["id"]) == 3
-    rows = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert rows == {1: "a", 2: "B", 3: "c"}
 
 
 def test_quantize_int8_roundtrip_error(spark):
@@ -64,7 +47,7 @@ def test_pq_codes_and_recall_gate(spark):
     so its in-plan recall gate must report TRUE."""
     from crypto_price_data_pipeline_spark.io.sources import load_table
     from crypto_price_data_pipeline_spark.operators.similarity import pq_build
-    from crypto_price_data_pipeline_spark.queries import q_pq_topk
+    from crypto_price_data_pipeline_spark.queries_retrieval import q_pq_topk
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     codes, codebooks = pq_build(emb, m=8, codebook_k=16)

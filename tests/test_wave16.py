@@ -11,7 +11,8 @@ SF = "/root/testdata/sf0.001"
 
 def test_rollup_hierarchy_equals_direct(spark):
     from crypto_price_data_pipeline_spark.io.sources import load_table
-    from crypto_price_data_pipeline_spark.queries import QUERIES, _dec
+    from crypto_price_data_pipeline_spark.queries import QUERIES
+    from crypto_price_data_pipeline_spark.functions.portable import _dec
 
     chained = [tuple(r) for r in QUERIES["q_rollup_hierarchy"](spark, SF).collect()]
     ev = load_table(spark, SF, "events")

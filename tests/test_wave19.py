@@ -14,7 +14,7 @@ def test_bm25_spot_value(spark):
     """Recompute the winner's score from raw text in pure Python."""
     from crypto_price_data_pipeline_spark.io.sources import load_table
     from crypto_price_data_pipeline_spark.queries import QUERIES
-    from crypto_price_data_pipeline_spark.queries_ext19 import (
+    from crypto_price_data_pipeline_spark.queries_retrieval import (
         BM25_B,
         BM25_K1,
         BM25_QUERY_TERMS,

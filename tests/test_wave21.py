@@ -16,7 +16,7 @@ def _spread_ref(v: int) -> int:
 
 
 def test_spread16_matches_python_reference(spark):
-    from crypto_price_data_pipeline_spark.queries_ext21 import _spread16
+    from crypto_price_data_pipeline_spark.queries_pipeline import _spread16
     from pyspark.sql import functions as F
 
     vals = [0, 1, 2, 0xFF, 0x100, 0xABCD, 0xFFFF]

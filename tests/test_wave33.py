@@ -71,7 +71,7 @@ def test_streamed_tf_store_derives_batch_tfidf_weights(spark):
 def test_read_evolved_widens_and_fills(spark, tmp_path):
     """Unified-schema landing read: INT→BIGINT and FLOAT→DOUBLE upcast
     per file, column absent in the old generation reads as NULL."""
-    from crypto_price_data_pipeline_spark.queries_ext33 import read_evolved
+    from crypto_price_data_pipeline_spark.queries_pipeline import read_evolved
 
     d = str(tmp_path / "landing")
     spark.createDataFrame([(1, 1.5), (2, 2.5)], "k int, v float").write.parquet(
@@ -90,7 +90,7 @@ def test_schema_evolution_rejects_incompatible_drift(spark, tmp_path):
     """A generation that RE-TYPED a column (string where the unified
     schema says double) must fail, not silently null — on both the
     unified-schema read (action time) and the mergeSchema read."""
-    from crypto_price_data_pipeline_spark.queries_ext33 import read_evolved
+    from crypto_price_data_pipeline_spark.queries_pipeline import read_evolved
 
     d = str(tmp_path / "landing")
     spark.createDataFrame([(1, 1.5)], "k bigint, v double").write.parquet(
@@ -148,7 +148,7 @@ def test_compact_artifact_store_bit_equal_and_idempotent(spark):
 
     from crypto_price_data_pipeline_spark.io.sources import load_table
     from crypto_price_data_pipeline_spark.operators.text import winnowing_pairs
-    from crypto_price_data_pipeline_spark.queries_ext6 import q_winnowing_pairs
+    from crypto_price_data_pipeline_spark.queries_dedup import q_winnowing_pairs
     from crypto_price_data_pipeline_spark.streaming.artifact_stream import (
         compact_artifact_store,
         read_artifact_store,

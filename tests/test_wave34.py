@@ -64,7 +64,7 @@ def test_twin_equals_original_on_sampled_corpus(spark):
     """A twin must be EXACTLY the original callable on the sampled
     directory — zero drift by construction."""
     from crypto_price_data_pipeline_spark.queries import QUERIES
-    from crypto_price_data_pipeline_spark.queries_ext7 import q_winnow_dedup
+    from crypto_price_data_pipeline_spark.queries_dedup import q_winnow_dedup
     from crypto_price_data_pipeline_spark.queries_ext34 import sampled_sf_dir
 
     d = sampled_sf_dir(spark, SF)

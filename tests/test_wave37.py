@@ -133,10 +133,8 @@ def test_rolling_sketch_calendar_keys_no_multimonth_aliasing(spark):
     equality assertions are exact."""
     import datetime
 
-    from crypto_price_data_pipeline_spark.queries_ext35 import (
+    from crypto_price_data_pipeline_spark.queries_sketch import (
         _kmv_rolling_from_events,
-    )
-    from crypto_price_data_pipeline_spark.queries_ext36 import (
         _quantile_sketch_from_events,
     )
 

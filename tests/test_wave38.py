@@ -51,7 +51,7 @@ def test_bpe_vocab_short_merge_corpus_matches_oracle(spark, tmp_path):
     import duckdb
 
     from crypto_price_data_pipeline_spark.operators.bpe import bpe_learn
-    from crypto_price_data_pipeline_spark.queries_ext37 import (
+    from crypto_price_data_pipeline_spark.queries_text import (
         _bpe_vocab_oracle,
         _bpe_words,
         q_bpe_vocab,
@@ -87,7 +87,7 @@ def test_sample_oracle_distinct_mirrors_engine_dedup(spark):
     testdata corpus; the structural pin is that both oracles now
     carry an explicit DISTINCT stage before every rank that the
     engine precedes with dropDuplicates."""
-    from crypto_price_data_pipeline_spark.queries_ext36 import (
+    from crypto_price_data_pipeline_spark.queries_sketch import (
         Q_QUANTILE_SKETCH_SQL,
         Q_STREAM_QUANTILE_SQL,
     )
@@ -115,10 +115,10 @@ def test_boilerplate_gram_rule_shared_single_source():
     inline re-implementation in either site."""
     import inspect
 
-    from crypto_price_data_pipeline_spark import queries_ext37
+    from crypto_price_data_pipeline_spark import queries_dedup
     from crypto_price_data_pipeline_spark.operators import text
 
-    sink_src = inspect.getsource(queries_ext37.q_stream_boilerplate)
+    sink_src = inspect.getsource(queries_dedup.q_stream_boilerplate)
     assert "gram_postings" in sink_src and "gram_doc_freq" in sink_src
     assert "regexp_replace" not in sink_src  # no inline normalization
     strip_src = inspect.getsource(text.boilerplate_strip)
@@ -173,7 +173,7 @@ def test_bpe_scale_guard_n_merges_capped_or_heavy():
 
 def test_changed_only_import_closure_attribution():
     """--changed-only's static import graph must attribute operator
-    edits to the queries that reach them: queries_ext38 (BPE chunks)
+    edits to the queries that reach them: queries_text (BPE chunks)
     depends on operators/bpe, operators/packing and operators/dedup
     through function-local imports, and operator modules never import
     a queries module back (no spurious whole-registry selection)."""
@@ -199,10 +199,10 @@ def test_changed_only_import_closure_attribution():
             closure(d, seen)
         return seen
 
-    c38 = closure(f"{pkg}.queries_ext38")
+    c_text = closure(f"{pkg}.queries_text")
     for dep in ("operators.bpe", "operators.packing", "operators.dedup",
-                "queries_ext37", "io.sources", "session"):
-        assert f"{pkg}.{dep}" in c38, dep
+                "functions.portable", "io.sources", "session"):
+        assert f"{pkg}.{dep}" in c_text, dep
     for op in ("operators.bpe", "operators.text", "operators.packing"):
         assert not any(
             d.startswith(f"{pkg}.queries") for d in closure(f"{pkg}.{op}")

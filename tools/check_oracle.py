@@ -3,12 +3,12 @@
 Runs every registry query on Spark and its oracle on DuckDB at the
 given sf dir, compares row count, column names, and the order-
 insensitive multiset of row values (exact equality; floats must match
-bit-for-bit — that is the design contract of queries.py).
+bit-for-bit — the determinism contract in functions/portable.py).
 
 Usage: python tools/check_oracle.py [--routine] [--changed-only[=REF]]
        [sf_dir] [query ...]
 
---routine skips the 14 heavy-exact names (quadratic pair / recursive
+--routine skips the 15 heavy-exact names (quadratic pair / recursive
 closure oracles, ~100 min at sf0.1) whose surface the registered
 ``*_sub`` quarter-corpus twins cover — the cheap sweep to run after
 every change; the exact names stay for the per-round deep sweep.
